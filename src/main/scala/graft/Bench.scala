@@ -141,7 +141,10 @@ object Bench {
       spreads += name -> ((r.lo, r.hi))
       r.io.foreach(m => ios += name -> m)
     }
-    def leg(name: String)(f: => Long): Unit = { seenLegs += name; if (!skipLegs.contains(name)) {
+    // legs that rewrite a store other legs read (see the retry pass)
+    val mutatingLegs = scala.collection.mutable.Set[String]()
+    def leg(name: String, mutates: Boolean = false)(f: => Long): Unit = {
+      seenLegs += name; if (mutates) mutatingLegs += name; if (!skipLegs.contains(name)) {
       def once(): (Double, Long) = {
         val t0 = System.nanoTime()
         val n = f
@@ -292,7 +295,7 @@ object Bench {
 
     // 1. insert: cell-store write path (SSTable-flush analog)
     val tmp = Files.createTempDirectory("graft_bench").toString
-    leg("insert") {
+    leg("insert", mutates = true) {
       val cells = CellEncodings.ordersCells(spark, sfDir)
       CellStore.write(cells, CellEncodings.ordersMeta, s"$tmp/orders_cells",
         numPartitions = GraftSession.cpus.toInt)
@@ -381,7 +384,7 @@ object Bench {
       spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
       "graft_bench_bucketed")
     if (wh.exists()) new scala.reflect.io.Directory(wh).deleteRecursively()
-    leg("insert_bucketed") {
+    leg("insert_bucketed", mutates = true) {
       CellStore.writeBucketed(
         CellEncodings.ordersCells(spark, sfDir)
           .unionByName(CellEncodings.ordersStatusFTombstones(spark, sfDir)),
@@ -402,7 +405,7 @@ object Bench {
     // domain is a parquet partition column; keyed reads derive domains from
     // the requested keys and prune whole directories (PartitionFilters)
     val domainMeta = CellEncodings.ordersMeta.copy(domainSplit = true)
-    leg("insert_domain") {
+    leg("insert_domain", mutates = true) {
       CellStore.writeDomainSplit(
         CellEncodings.ordersCells(spark, sfDir)
           .unionByName(CellEncodings.ordersStatusFTombstones(spark, sfDir)),
@@ -456,7 +459,7 @@ object Bench {
     // (key, super_name, sub) cell layout; read runs the two-level slice
     // assembly (the q10/q11 machinery) — supercolumn-limited slices over
     // a sampled key batch against the store written here.
-    leg("insert_super") {
+    leg("insert_super", mutates = true) {
       CellStore.write(CellEncodings.lineitemSuperCells(spark, sfDir),
         CellEncodings.lineitemSuperMeta, s"$tmp/li_super",
         numPartitions = GraftSession.cpus.toInt)
@@ -845,16 +848,17 @@ object Bench {
     // top). The floor comes from the MAIN pass's own probes — even in a
     // contaminated run most probes are quiet because the windows rove, so
     // min() is a robust quiet-box reference; the 20 ms clamp guards a
-    // freak fast sample. A leg retries at most ONCE.
-    val probeFloor = math.max(20L, legProbes.min)
+    // freak fast sample. A leg retries at most ONCE. When every leg was
+    // skipped no probe ran and nothing is accepted, so the pass is empty.
+    val probeFloor = math.max(20L, legProbes.reduceOption(_ min _).getOrElse(20L))
     def inBand(ms: Long): Boolean = ms <= probeFloor * 3 + 50
     val contendedLegs = scala.collection.mutable.ArrayBuffer[String]()
     val retriedLegs = scala.collection.mutable.ArrayBuffer[String]()
-    // read legs retry BEFORE write legs: a retried insert overwrites its
-    // store, and a reader lens built over the old file set would fail on
-    // the stale listing (FileNotFound — bit the first c8 run). A retry
+    // read legs retry BEFORE mutating legs: a retried insert overwrites
+    // its store, and a reader lens built over the old file set would fail
+    // on the stale listing (FileNotFound — bit the first c8 run). A retry
     // that still throws keeps the first measurement and flags the leg.
-    acceptedRuns.keys.toSeq.sortBy(_.startsWith("insert")).foreach { name =>
+    acceptedRuns.keys.toSeq.sortBy(mutatingLegs.contains).foreach { name =>
       val first = acceptedRuns(name)
       if (!inBand(first.pBefore) || !inBand(first.pAfter)) {
         retriedLegs += name

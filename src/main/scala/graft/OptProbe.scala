@@ -330,26 +330,12 @@ object OptProbe {
         .agg(approx_count_distinct(col("key")),
           approx_count_distinct(col("col_name"))).head()
     }
-    // full write A/B: round-19 fixed hint (conf pinned) vs round-20
-    // derived sizing (conf unset -> NDV pass + right-sized bitsets)
-    probe("ndv/write_orders_pinned") {
-      spark.conf.set("spark.graft.bloom.expectedNdv", "131072")
-      try CellStore.write(CellEncodings.ordersCells(spark, sfDir),
-        CellEncodings.ordersMeta, s"$tmp/ndv_o1",
-        numPartitions = GraftSession.cpus.toInt)
-      finally spark.conf.unset("spark.graft.bloom.expectedNdv")
-    }
+    // full writes with the derived bloom sizing (NDV pass + right-sized
+    // bitsets)
     probe("ndv/write_orders_derived") {
       CellStore.write(CellEncodings.ordersCells(spark, sfDir),
         CellEncodings.ordersMeta, s"$tmp/ndv_o2",
         numPartitions = GraftSession.cpus.toInt)
-    }
-    probe("ndv/write_super_pinned") {
-      spark.conf.set("spark.graft.bloom.expectedNdv", "131072")
-      try CellStore.write(CellEncodings.lineitemSuperCells(spark, sfDir),
-        CellEncodings.lineitemSuperMeta, s"$tmp/ndv_s1",
-        numPartitions = GraftSession.cpus.toInt)
-      finally spark.conf.unset("spark.graft.bloom.expectedNdv")
     }
     probe("ndv/write_super_derived") {
       CellStore.write(CellEncodings.lineitemSuperCells(spark, sfDir),
@@ -383,16 +369,16 @@ object OptProbe {
         noop(lens.rangeSliceByKeys(None, None, None, SliceRange(count = 3),
           Int.MaxValue))
       }
-      // keyed multiget A/B (round 20): the single-exchange keyed
-      // reconcile (liveViewKeyed, what multigetSlice now plans) vs the
-      // r19 liveView shape, same session, same store
+      // keyed multiget A/B (round 20): the keyed reconcile (liveView over
+      // the key-repartitioned restriction, what multigetSlice plans) vs
+      // the r19 liveView shape, same session, same store
       locally {
         import graft.operators.{Reconcile, Slice, SliceRange}
         val keys = (0L until 3000L by 20L).map(i => f"$i%010d")
         val keyPred = col("key").isin(keys: _*)
         probe("read/multiget_keyed_r20") {
           noop(Slice(
-            Reconcile.liveViewKeyed(stored.filter(keyPred))
+            Reconcile.liveView(stored.filter(keyPred).repartition(col("key")))
               .filter(col("super_name").isNull),
             CellEncodings.ordersMeta.comparator, "col_name",
             SliceRange(count = 5)))
@@ -412,28 +398,12 @@ object OptProbe {
         lens.rangeSliceByKeys(Some("0000000000"), None, None,
           SliceRange(count = 5), 1000) // builds the frame: pick runs eagerly
       }
-      // in-session A/B: the round-19 single-phase pick (full-range
-      // value-free liveness aggregate + TakeOrdered + collect) vs the
-      // round-20 two-phase pick above — the box's roving contention makes
-      // cross-session probe numbers incomparable
-      probe("rangeslice/pick_old_1phase") {
-        import graft.operators.RangeScan
-        val pre = stored.filter(
-          RangeScan.keyBoundsPredicate(col("key"), Some("0000000000"), None))
-        val tok = (df: org.apache.spark.sql.DataFrame) =>
-          df.withColumn("token", graft.model.Tokens.token(
-            CellEncodings.ordersMeta.partitioner, col("key")))
-        tok(lens.liveKeySet(pre))
-          .orderBy(RangeScan.ringOrder(col("token"), None), col("key"))
-          .limit(1000)
-          .select(col("key")).collect()
-      }
       probe("rangeslice/lens_full") {
         noop(lens.rangeSliceByKeys(Some("0000000000"), None, None,
           SliceRange(count = 5), 1000))
       }
-      // the two-phase pick's individual jobs (same session as the
-      // 1-phase probe above so the numbers are comparable)
+      // the page pick's own job: the value-free liveness rollup + ring
+      // order top-K + collect
       probe("rangeslice/pick_rollup_1phase") {
         import graft.operators.RangeScan
         val pre = stored.filter(
@@ -442,24 +412,6 @@ object OptProbe {
           df.withColumn("token", graft.model.Tokens.token(
             CellEncodings.ordersMeta.partitioner, col("key")))
         tok(lens.liveKeySetRollup(pre))
-          .orderBy(RangeScan.ringOrder(col("token"), None), col("key"))
-          .limit(1000)
-          .select(col("key")).collect()
-      }
-      probe("rangeslice/pick_new_phase1") {
-        stored.filter(col("key") >= "0000000000")
-          .select(col("key")).distinct()
-          .orderBy(col("key")).limit(4000)
-          .agg(count(lit(1)), max(col("key"))).head()
-      }
-      probe("rangeslice/pick_new_phase2") {
-        import graft.operators.RangeScan
-        val pre = stored.filter(col("key") >= "0000000000" &&
-          col("key") <= "0000008000")
-        val tok = (df: org.apache.spark.sql.DataFrame) =>
-          df.withColumn("token", graft.model.Tokens.token(
-            CellEncodings.ordersMeta.partitioner, col("key")))
-        tok(lens.liveKeySet(pre))
           .orderBy(RangeScan.ringOrder(col("token"), None), col("key"))
           .limit(1000)
           .select(col("key")).collect()

@@ -53,11 +53,6 @@ class CassandraLens(
     private val cachedFrame: Option[DataFrame] = None) {
   GraftFunctions.register(cells.sparkSession)
 
-  def this(cells: DataFrame, meta: CfMeta, horizons: Option[(DataFrame, DataFrame)]) =
-    this(cells, meta, horizons, None, Nil)
-
-  def this(cells: DataFrame, meta: CfMeta) = this(cells, meta, None, None, Nil)
-
   /** Attach a pre-apply listener (ColumnFamilyStore.setStoreApplyListener
     * analog). Listeners are store configuration: they persist across
     * mutations and derived lenses, in attach order.
@@ -220,19 +215,31 @@ class CassandraLens(
     case None => liveFromKeyed(cells.filter(pred))
   }
 
-  /** Live view of a KEY-BOUNDED restriction: the single-exchange keyed
-    * reconcile ([[Reconcile.liveViewKeyed]]) when horizons are
-    * self-computed; sidecar lenses keep their precomputed-horizon join
-    * shape (already one aggregate + two tiny-table joins), and a store
-    * whose every leaf is BUCKETED by key already hands the reconcile its
-    * distribution — adding the keyed repartition there would re-shuffle
-    * a read that was exchange-FREE (PlanQualitySpec pins that contract).
+  /** Live view of a KEY-BOUNDED restriction. Sidecar lenses keep their
+    * precomputed-horizon join shape (one aggregate + two tiny-table
+    * joins), and a store whose every leaf is BUCKETED by key already hands
+    * the reconcile its distribution — adding the keyed repartition there
+    * would re-shuffle a read that was exchange-FREE (PlanQualitySpec pins
+    * that contract).
     */
   private def liveFromKeyed(restricted: DataFrame): DataFrame = horizons match {
     case Some(_) => liveFrom(restricted)
     case None if CassandraLens.bucketedByKey(cells.queryExecution.analyzed) =>
       liveFrom(restricted)
-    case None => Reconcile.liveViewKeyed(restricted)
+    case None =>
+      // Keyed reconcile: the restricted cells are repartitioned by key
+      // BEFORE the reconcile, so raw versions cross that exchange and the
+      // winners aggregate and the caller's per-key slice window run
+      // behind it. The row- and supercolumn-horizon aggregates read
+      // different (value-free) column sets, so ReuseExchange does not
+      // merge them: each re-scans the restriction behind its own keyed
+      // exchange and is broadcast into the shadow joins — 5 scans,
+      // 3 keyed exchanges and 2 broadcasts for a 150-key multiget
+      // (plans/r20/read_after.txt). KEY-BOUNDED ONLY: a keyed read's rows
+      // are bounded by the 10k-key page convention, so shuffling raw
+      // versions is small at any corpus size; the full-CF [[live]] keeps
+      // map-side partial aggregation ahead of its exchange.
+      Reconcile.liveView(restricted.repartition(col("key")))
   }
 
   /** domainSplit routing (fork CFMetaData.domainSplit): keyed reads derive
@@ -371,142 +378,70 @@ class CassandraLens(
   /** Q6 `get_range_slices` over key BOUNDS (start/end inclusive).
     * The key predicate is applied to the RAW cells (it commutes with
     * per-key reconciliation), so it pushes down into the parquet scan;
-    * only the restricted range is reconciled.
+    * only the restricted range is reconciled. On a row-cached lens the
+    * same predicate filters the cached reconciled view instead.
     */
   def rangeSliceByKeys(
       startKey: Option[String], endKey: Option[String],
       superName: Option[Array[Byte]], pred: SlicePredicate, maxKeys: Int): DataFrame = {
     require(maxKeys > 0, "get_range_slices requires a positive key count (thrift:240-246)")
     val bounds = RangeScan.keyBoundsPredicate(col("key"), startKey, endKey)
-    val bounded = cachedLive match {
-      // row cache: the bounds predicate commutes with per-key reconcile,
-      // so filtering the cached reconciled view is the cache-hit range scan
-      case Some(c) => restrictCachedToPickedKeys(c.filter(bounds), None, maxKeys)
-      case None =>
-        restrictToPickedKeys(cells.filter(bounds), None, maxKeys)
-    }
-    sliceOver(bounded, superName, pred)
+    sliceOver(livePage(cachedLive.getOrElse(cells).filter(bounds), None, maxKeys),
+      superName, pred)
   }
 
-  /** Key-limited live view: pick the first maxKeys LIVE keys in ring order
-    * (one reconcile over the range), then reconcile only the raw cells of
-    * the picked keys — the broadcast semi-join lands on the parquet scan,
-    * so the second pass reads and reconciles maxKeys keys, not the range.
-    *
-    * NOTE: for maxKeys <= 10000 the key list is materialized EAGERLY at
-    * call time (one Spark job) — deliberately mirroring the reference,
-    * whose coordinator materializes each get_range_slices page before
-    * answering; the returned DataFrame then embeds the page as an In
-    * filter instead of re-running the picking plan in every branch.
-    * Above 10000 keys the plan stays fully lazy via a broadcast semi-join.
-    * Consequence: the page is a SNAPSHOT — re-executing the returned
-    * DataFrame after new runs land reuses the frozen key list (consistent
-    * with the reference, where a served page never retro-updates).
+  /** Key-limited live view of a range `pre` — raw cells, or the row
+    * cache's reconciled view. The first maxKeys LIVE keys in ring order
+    * are picked ([[pickPage]]), then only the picked keys are reconciled:
+    * the page restriction lands on the parquet scan, so the second pass
+    * reads maxKeys keys, not the range. The cached view is ALREADY
+    * reconciled (every row live), so there the page is a distinct() over
+    * it and the restriction a plain filter — the cache-hit path end to
+    * end.
     */
-  private def restrictToPickedKeys(pre: DataFrame, startToken: Option[Column],
-      maxKeys: Int): DataFrame = {
-    if (maxKeys == Int.MaxValue) return withToken(liveFrom(pre))
-    if (maxKeys <= 10000) {
-      // single-phase pick: the value-free liveness aggregate over the
-      // whole range, first maxKeys live keys in ring order (the r19 shape
-      // — still the general path; the two-phase prefix pick below replaces
-      // it where a key bound can express the prefix)
-      def fullPick(): Seq[String] =
-        withToken(liveKeySet(pre))
-          .orderBy(RangeScan.ringOrder(col("token"), startToken), col("key"))
-          .limit(maxKeys)
-          .select(col("key")).collect().map(_.getString(0)).toSeq
-      // Two-phase eager page pick (round 20, VERDICT r19 task 5; guide
-      // §1.1 first-principles: a 1000-key page should not aggregate the
-      // whole CF). OptProbe r20 measured the single-phase pick at 0.98 s
-      // of rangeslice's 1.30 s — a cell-grain groupBy + horizon joins
-      // over EVERY key in range just to keep the first 1000 live keys.
-      // When the partitioner is order-preserving and the scan does not
-      // wrap (no startToken arc), ring order IS key order, so the first
-      // `overFetch` raw keys are exactly {key <= bound} for the
-      // overFetch-th distinct key: phase 1 finds that BOUND with a
-      // single-column distinct + limit + max (no liveness work); phase 2
-      // runs the liveness aggregate only under the bound — ONE literal
-      // predicate that prunes the range-laid store to its prefix row
-      // groups (an In list of the over-fetch would plan 4000 literals
-      // into every scan branch of the liveness plan — measured SLOWER
-      // than the single-phase pick). Correctness: liveness of a key
-      // depends only on that key's own cells and markers, all of which
-      // pass the key bound; every key above the bound is ring-after
-      // every key under it. If the page yields maxKeys live keys they
-      // are exactly the single-phase pick's; if the raw prefix is
-      // EXHAUSTED (fewer than overFetch distinct keys exist) the live
-      // keys found are all there are; only a prefix where more than 3/4
-      // of the over-fetch is dead falls back to the single-phase pick.
-      // The page stays a SNAPSHOT and the final key list still lands as
-      // an In filter, like the reference's coordinator materializing
-      // each get_range_slices page. Size-gated: the prefix pick pays a
-      // second Spark job to prune the first one's scan, which only wins
-      // when the range is big enough that scanning it dominates job
-      // latency — below spark.graft.range.twoPhasePickBytes (default
-      // 1 GB; plan-statistics estimate, no job) the single-phase rollup
-      // is faster (OptProbe r20: phase jobs ~0.5 s each at sf0.1 against
-      // a 1-job pick of the same total cost).
-      val twoPhaseBytes = BigInt(cells.sparkSession.conf
-        .get("spark.graft.range.twoPhasePickBytes", (1L << 30).toString))
-      val twoPhase = meta.partitioner == PartitionerType.OrderPreserving &&
-        startToken.isEmpty &&
-        pre.queryExecution.optimizedPlan.stats.sizeInBytes >= twoPhaseBytes
-      val keys = graft.stat.StoreLatency.timed("range.page_pick") {
-        if (!twoPhase) fullPick()
-        else {
-          val overFetch = math.min(4L * maxKeys, 10000L).toInt
-          val raw = pre.select(col("key")).distinct()
-            .orderBy(col("key")).limit(overFetch)
-            .agg(count(lit(1)), max(col("key"))).head()
-          val rawCount = raw.getLong(0)
-          if (rawCount == 0L) Seq.empty[String]
-          else {
-            val bound = raw.getString(1)
-            val pageLive = withToken(liveKeySet(pre.filter(col("key") <= bound)))
-              .orderBy(RangeScan.ringOrder(col("token"), startToken), col("key"))
-              .limit(maxKeys)
-              .select(col("key")).collect().map(_.getString(0)).toSeq
-            if (pageLive.size >= maxKeys || rawCount < overFetch) pageLive
-            else fullPick() // too many dead keys under the bound
-          }
-        }
-      }
-      val restricted =
-        if (keys.isEmpty) pre.filter(lit(false))
-        else pre.filter(col("key").isin(keys: _*))
-      withToken(liveFromKeyed(restricted))
-    } else {
-      // no pickKeys here: liveKeySet is already key-distinct, so a second
-      // distinct() would add a redundant exchange+aggregate stage
-      val picked = withToken(liveKeySet(pre))
-        .orderBy(RangeScan.ringOrder(col("token"), startToken), col("key"))
-        .limit(maxKeys)
-        .select(col("key"))
-      withToken(liveFrom(pre.join(broadcast(picked), Seq("key"), "left_semi")))
-    }
-  }
+  private def livePage(pre: DataFrame, startToken: Option[Column],
+      maxKeys: Int): DataFrame = withToken(
+    if (cachedLive.isDefined) {
+      if (maxKeys == Int.MaxValue) pre
+      else restrictToPage(pre, pickPage(pre.select(col("key")).distinct(),
+        startToken, maxKeys, "range.page_pick_cached"))
+    } else if (maxKeys == Int.MaxValue) liveFrom(pre)
+    else pickPage(liveKeySet(pre), startToken, maxKeys, "range.page_pick") match {
+      case page @ Left(_) => liveFromKeyed(restrictToPage(pre, page))
+      // above the page convention the restriction is not key-bounded
+      case page => liveFrom(restrictToPage(pre, page))
+    })
 
-  /** [[restrictToPickedKeys]] for a row-cached lens: the cached view is
-    * ALREADY reconciled (every row live), so the key page is a distinct()
-    * over it and the restricted slice input is a plain filter — no
-    * reconcile, no marker aggregates, the cache-hit path end to end.
+  /** The first maxKeys keys of the key-distinct frame `keys` in ring
+    * order. For maxKeys <= 10000 the page is collected EAGERLY at call
+    * time (one Spark job, timed as `timer`) — deliberately mirroring the
+    * reference, whose coordinator materializes each get_range_slices page
+    * before answering (StorageProxy.java:805-864); the returned frame then
+    * embeds the page as an In filter instead of re-running the picking
+    * plan in every branch. Consequence: the page is a SNAPSHOT —
+    * re-executing the returned DataFrame after new runs land reuses the
+    * frozen key list, as a served reference page never retro-updates.
+    * Above 10000 keys the pick stays a lazy frame for a broadcast
+    * semi-join.
     */
-  private def restrictCachedToPickedKeys(c: DataFrame, startToken: Option[Column],
-      maxKeys: Int): DataFrame = {
-    if (maxKeys == Int.MaxValue) return withToken(c)
-    val picked = withToken(c.select(col("key")).distinct())
+  private def pickPage(keys: DataFrame, startToken: Option[Column], maxKeys: Int,
+      timer: String): Either[Seq[String], DataFrame] = {
+    val picked = withToken(keys)
       .orderBy(RangeScan.ringOrder(col("token"), startToken), col("key"))
       .limit(maxKeys)
       .select(col("key"))
-    if (maxKeys <= 10000) {
-      // same eager page materialization as the cold path (see NOTE above)
-      val keys = graft.stat.StoreLatency.timed("range.page_pick_cached") {
+    if (maxKeys <= 10000)
+      Left(graft.stat.StoreLatency.timed(timer) {
         picked.collect().map(_.getString(0)).toSeq
-      }
-      if (keys.isEmpty) withToken(c.filter(lit(false)))
-      else withToken(c.filter(col("key").isin(keys: _*)))
-    } else withToken(c.join(broadcast(picked), Seq("key"), "left_semi"))
+      })
+    else Right(picked)
+  }
+
+  private def restrictToPage(df: DataFrame,
+      page: Either[Seq[String], DataFrame]): DataFrame = page match {
+    case Left(keys) if keys.isEmpty => df.filter(lit(false))
+    case Left(keys) => df.filter(col("key").isin(keys: _*))
+    case Right(picked) => df.join(broadcast(picked), Seq("key"), "left_semi")
   }
 
   /** The set of LIVE keys of a raw cell range, computed WITHOUT values:
@@ -617,11 +552,8 @@ class CassandraLens(
     def inRange(df: DataFrame): DataFrame = withToken(df)
       .filter(RangeScan.tokenRangePredicate(col("token"), startToken, endToken))
       .drop("token")
-    val bounded = cachedLive match {
-      case Some(c) => restrictCachedToPickedKeys(inRange(c), startToken, maxKeys)
-      case None => restrictToPickedKeys(inRange(cells), startToken, maxKeys)
-    }
-    sliceOver(bounded, superName, pred)
+    sliceOver(livePage(inRange(cachedLive.getOrElse(cells)), startToken, maxKeys),
+      superName, pred)
   }
 
   // ---- Q7/Q8/Q9: mutations (return the new store view) ----

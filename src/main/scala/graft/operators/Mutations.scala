@@ -1,9 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-
-import graft.model.Cell
 
 /** Write-path operators (SURVEY §2.1 Q7–Q9): timestamped upserts and
   * tombstones, expressed as cell appends. The reference applies a
@@ -75,19 +73,5 @@ object Mutations {
       col("ts").cast("long").as("ts"),
       col("tombstone").cast("boolean").as("tombstone"),
       col("local_del_time").cast("int").as("local_del_time"))
-  }
-
-  /** Single-cell helpers for tests / point writes. */
-  def insertOne(spark: SparkSession, key: String, superName: Array[Byte],
-      colName: Array[Byte], value: Array[Byte], ts: Long): DataFrame = {
-    import spark.implicits._
-    Seq(Cell(key, superName, colName, value, ts, tombstone = false, 0)).toDF()
-  }
-
-  def deleteOne(spark: SparkSession, key: String, superName: Array[Byte],
-      colName: Array[Byte], ts: Long, localDeletionTimeSec: Int): DataFrame = {
-    import spark.implicits._
-    Seq(Cell(key, superName, colName, Array.emptyByteArray, ts,
-      tombstone = true, localDeletionTimeSec)).toDF()
   }
 }

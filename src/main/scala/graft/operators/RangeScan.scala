@@ -61,7 +61,7 @@ object RangeScan {
     * distributed top-K (TakeOrderedAndProject over the distinct keys),
     * never a global window over cells. Callers apply the picked set to
     * the RAW cell store (literal In page or broadcast semi-join —
-    * CassandraLens.restrictToPickedKeys) so the expensive reconcile runs
+    * CassandraLens.livePage) so the expensive reconcile runs
     * once over the range for key selection and once over only the
     * selected keys — not twice over the full range (per-key reconcile
     * commutes with key restriction).

@@ -83,19 +83,14 @@ object Reconcile {
     * keep a column iff ts > max(row_del_ts, sc_del_ts)
     * (db/ColumnFamilyStore.java:663-717: `column.timestamp() <=
     * cf.getMarkedForDeleteAt()` ⇒ removed; subcolumns additionally against
-    * the supercolumn's markedForDeleteAt).
-    *
-    * The tombstone-marker sets are tiny relative to the data (they are
-    * deletes, not data); Spark/AQE broadcasts them when small, otherwise
-    * this is a shuffle join on the same `key` the caller already groups by.
-    */
-  def shadowByContainers(cells: DataFrame): DataFrame =
-    shadowByContainersGiven(cells, rowTombstones(cells), superTombstones(cells))
-
-  /** Shadowing against PRECOMPUTED horizons — the sidecar path: compaction
-    * persists the (tiny) horizon tables next to the runs, so reads join
-    * against them instead of re-aggregating marker cells out of the full
-    * store (CellStore.writeWithHorizons).
+    * the supercolumn's markedForDeleteAt). The horizons are either
+    * derived from the raw cells ([[rowTombstones]], [[superTombstones]])
+    * or PRECOMPUTED — the sidecar path: compaction persists the (tiny)
+    * horizon tables next to the runs, so reads join against them instead
+    * of re-aggregating marker cells out of the full store
+    * (CellStore.writeWithHorizons). The marker sets are tiny relative to
+    * the data (they are deletes, not data); Spark/AQE broadcasts them when
+    * small, otherwise this is a shuffle join on `key`.
     */
   def shadowByContainersGiven(cells: DataFrame, rowDel: DataFrame, scDel: DataFrame): DataFrame = {
     cells
@@ -121,33 +116,11 @@ object Reconcile {
     // branches to a marker filter + max agg — without this they each ran
     // the full ReconcileMax, dragging `value` (the widest column) into
     // their scans; now column pruning drops it from both
-    shadowByContainersGiven(latestCells(cells),
-      rowTombstones(cells), superTombstones(cells)).filter(!col("tombstone"))
+    liveViewGiven(cells, rowTombstones(cells), superTombstones(cells))
 
   /** Live view with precomputed horizons (sidecar read path). */
   def liveViewGiven(cells: DataFrame, rowDel: DataFrame, scDel: DataFrame): DataFrame =
     shadowByContainersGiven(latestCells(cells), rowDel, scDel).filter(!col("tombstone"))
-
-  /** [[liveView]] for a KEY-BOUNDED cell set (round 20) — point reads,
-    * multigets, materialized range pages: repartition the restricted
-    * cells by `key` ONCE. HashPartitioning(key) clusters the reconcile
-    * aggregate, both horizon aggregates, the container-shadow joins, and
-    * the caller's per-key slice window, so they all stack behind that
-    * single exchange — and the three branches are IDENTICAL exchange
-    * subtrees, so ReuseExchange scans and shuffles the restriction once
-    * instead of three times (the r19 keyed-read plan carried 5 scans,
-    * 3 shuffle exchanges and 2 broadcast builds for a 150-key multiget).
-    * KEY-BOUNDED ONLY: the full-CF [[liveView]] keeps map-side partial
-    * aggregation ahead of its exchange — shuffling raw versions of a
-    * 100 TB CF would forfeit that compression — while a keyed read's
-    * row volume is bounded by the 10k-key page convention, so its raw
-    * keyed shuffle is small by construction at any corpus size.
-    */
-  def liveViewKeyed(cells: DataFrame): DataFrame = {
-    val c = cells.repartition(col("key"))
-    shadowByContainersGiven(latestCells(c), rowTombstones(c), superTombstones(c))
-      .filter(!col("tombstone"))
-  }
 
   /** Compaction output view (SURVEY §2.7): winning versions with tombstones
     * RETAINED unless expired — a tombstone (column-level or marker) is

@@ -35,9 +35,7 @@ object CellStore {
     * holding more distinct keys (the read-side failure mode that never
     * shows at sf0.1). Each writer now runs ONE approx_count_distinct
     * aggregate over the frame (column-pruned to key/col_name/domain) and
-    * divides by its own expected file count. `spark.graft.bloom.
-    * expectedNdv`, when set, pins every hint and skips the pass — the
-    * deployment override for known row-group sizing. 2x headroom absorbs
+    * divides by its own expected file count. 2x headroom absorbs
     * placement imbalance; blooms have no false negatives, so an
     * under-provisioned filter only degrades its false-positive rate.
     * Clamp floor 2^10 keeps degenerate estimates sane, ceiling 2^21
@@ -49,11 +47,6 @@ object CellStore {
   private def clampNdv(perFile: Long): String =
     math.min(BloomNdvCeiling,
       math.max(BloomNdvFloor, 2L * math.max(perFile, 1L))).toString
-
-  private def pinnedNdv(spark: SparkSession): Option[String] = {
-    val v = spark.conf.get("spark.graft.bloom.expectedNdv", "")
-    if (v.isEmpty) None else Some(v)
-  }
 
   /** Upper bound on the frame's DISTINCT key count from leaf metadata —
     * zero Spark jobs (ADVICE r19: "derive expected NDV from an estimated
@@ -105,34 +98,30 @@ object CellStore {
     * approx_count_distinct pass.
     */
   private def derivedNdv(cells: DataFrame, files: Int): (String, String) =
-    pinnedNdv(cells.sparkSession) match {
-      case Some(v) => (v, v)
-      case None => leafRowBound(cells) match {
-        case Some(bound) =>
-          // rows-per-file bounds BOTH per-file distinct keys and
-          // per-file distinct names (range placement balances rows)
-          val h = clampNdv(bound / math.max(1, files))
-          (h, h)
-        case None =>
-          val r = cells.agg(
-            approx_count_distinct(col("key")),
-            approx_count_distinct(col("col_name"))).head()
-          // col_name: the name SET repeats in every file — per-file ≈ global
-          (clampNdv(r.getLong(0) / math.max(1, files)), clampNdv(r.getLong(1)))
-      }
+    leafRowBound(cells) match {
+      case Some(bound) =>
+        // rows-per-file bounds BOTH per-file distinct keys and
+        // per-file distinct names (range placement balances rows)
+        val h = clampNdv(bound / math.max(1, files))
+        (h, h)
+      case None =>
+        val r = cells.agg(
+          approx_count_distinct(col("key")),
+          approx_count_distinct(col("col_name"))).head()
+        // col_name: the name SET repeats in every file — per-file ≈ global
+        (clampNdv(r.getLong(0) / math.max(1, files)), clampNdv(r.getLong(1)))
     }
 
   /** Key hint for a DOMAIN-partitioned write: files-per-key-population is
     * the domain fan-out (times `bucketsPerDomain` when also bucketed).
     */
-  private def derivedDomainNdv(cells: DataFrame, bucketsPerDomain: Int): String =
-    pinnedNdv(cells.sparkSession).getOrElse {
-      val r = cells.agg(
-        approx_count_distinct(col("key")),
-        approx_count_distinct(substring(col("key"), -2, 2))).head()
-      val files = math.max(1L, r.getLong(1)) * math.max(1, bucketsPerDomain)
-      clampNdv(r.getLong(0) / files)
-    }
+  private def derivedDomainNdv(cells: DataFrame, bucketsPerDomain: Int): String = {
+    val r = cells.agg(
+      approx_count_distinct(col("key")),
+      approx_count_distinct(substring(col("key"), -2, 2))).head()
+    val files = math.max(1L, r.getLong(1)) * math.max(1, bucketsPerDomain)
+    clampNdv(r.getLong(0) / files)
+  }
 
   def write(cells: DataFrame, meta: CfMeta, path: String, numPartitions: Int = 32): Unit = {
     val sk = Comparators.sortKey(meta.comparator, col("col_name"))

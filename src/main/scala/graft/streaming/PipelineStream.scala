@@ -1228,13 +1228,6 @@ object PipelineStream {
       .dropDuplicates("fp")
       .select(col("fp"))
 
-  /** Streaming quality gate: the batch keep-flag + repetition-free checks
-    * as a stateless filter (no state at all — quality signals are
-    * per-document expressions, so the gate composes with any stream).
-    */
-  def qualityGate(docs: DataFrame, textCol: String): DataFrame =
-    docs.filter(TextAnalysis.keepFlag(col(textCol)))
-
   /** Streaming decontamination: emit the id of each arriving document
     * that shares a word n-gram with the (static) eval-set gram table —
     * once, on first discovery. Eval benchmarks are fixed while the crawl

@@ -59,6 +59,56 @@ class RangeScanSpec extends SparkSpec {
     assert(keysOf(r) == Seq("c", "f"))
   }
 
+  test("page pick: eager and lazy branches equal the unlimited scan's ring-order prefix") {
+    // 11,600 keys, more than 10,001 of them live: maxKeys 3 and 10000 take
+    // the eager key-list branch, 10001 the lazy broadcast semi-join. Two
+    // fully dead key blocks (a row tombstone over every cell) open the key
+    // scan and the wrap-around token scan; scattered keys die from a
+    // column tombstone plus a row tombstone, others keep one column past
+    // a column or row tombstone.
+    def k(i: Int) = f"k$i%05d"
+    val store = (0 until 11600).flatMap { i =>
+      if (i < 200 || (i > 5000 && i <= 5200))
+        Seq(ins(k(i), "c1", s"a$i", 1), ins(k(i), "c2", s"b$i", 9), delRow(k(i), 10))
+      else if (i % 13 == 0)
+        Seq(ins(k(i), "c1", s"a$i", 1), del(k(i), "c1", 3), ins(k(i), "c2", s"b$i", 4),
+          delRow(k(i), 5))
+      else if (i % 7 == 0)
+        Seq(ins(k(i), "c1", s"a$i", 1), delRow(k(i), 5), ins(k(i), "c2", s"b$i", 9))
+      else if (i % 5 == 0)
+        Seq(ins(k(i), "c1", s"a$i", 1), del(k(i), "c1", 3), ins(k(i), "c2", s"b$i", 9))
+      else
+        Seq(ins(k(i), "c1", s"a$i", 1), ins(k(i), "c1", s"x$i", 2), ins(k(i), "c2", s"b$i", 9))
+    }
+    val plain = new CassandraLens(cellsDf(store), CfMeta("t"))
+    val cached = plain.withRowCache()
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(String, String, String, Long)] =
+      df.select(col("key"), decode(col("col_name"), "UTF-8"), decode(col("value"), "UTF-8"),
+        col("ts")).collect()
+        .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq.sorted
+    val start = k(5000)
+    val calls: Seq[(String, CassandraLens => Int => org.apache.spark.sql.DataFrame,
+        String => (Int, String))] = Seq(
+      ("rangeSliceByKeys", l => m => l.rangeSliceByKeys(None, None, None, SliceRange(count = 5), m),
+        key => (0, key)),
+      ("rangeSliceByToken", l => m => l.rangeSliceByToken(Some(lit(start)), Some(lit(k(4999))),
+        None, SliceRange(count = 5), m), key => (if (key > start) 0 else 1, key)))
+    try {
+      for ((lensName, l) <- Seq("plain" -> plain, "row-cached" -> cached);
+           (callName, call, ring) <- calls) {
+        val full = rows(call(l)(Int.MaxValue))
+        val ringKeys = full.map(_._1).distinct.sortBy(ring)
+        assert(ringKeys.size > 10001, s"$lensName $callName: ${ringKeys.size} live keys")
+        assert(!ringKeys.contains(k(0)) && !ringKeys.contains(k(5001)) && !ringKeys.contains(k(13)))
+        for (m <- Seq(3, 10000, 10001)) {
+          val page = ringKeys.take(m).toSet
+          assert(rows(call(l)(m)) == full.filter(r => page.contains(r._1)),
+            s"$lensName $callName maxKeys=$m")
+        }
+      }
+    } finally cached.dropRowCache()
+  }
+
   test("md5-hex token order differs from key order but is deterministic") {
     val r = lens(PartitionerType.Md5Hex).rangeSliceByKeys(None, None, None, SliceRange(count = 5), 4)
     // first 4 keys in md5 order

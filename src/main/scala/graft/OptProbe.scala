@@ -369,16 +369,16 @@ object OptProbe {
         noop(lens.rangeSliceByKeys(None, None, None, SliceRange(count = 3),
           Int.MaxValue))
       }
-      // keyed multiget A/B (round 20): the keyed reconcile (liveView over
-      // the key-repartitioned restriction, what multigetSlice plans) vs
-      // the r19 liveView shape, same session, same store
+      // keyed multiget A/B: the one-pass keyed reconcile (liveByKey, what
+      // multigetSlice plans) vs the r19 liveView shape, same session,
+      // same store
       locally {
         import graft.operators.{Reconcile, Slice, SliceRange}
         val keys = (0L until 3000L by 20L).map(i => f"$i%010d")
         val keyPred = col("key").isin(keys: _*)
         probe("read/multiget_keyed_r20") {
           noop(Slice(
-            Reconcile.liveView(stored.filter(keyPred).repartition(col("key")))
+            Reconcile.liveByKey(stored.filter(keyPred))
               .filter(col("super_name").isNull),
             CellEncodings.ordersMeta.comparator, "col_name",
             SliceRange(count = 5)))
@@ -402,16 +402,16 @@ object OptProbe {
         noop(lens.rangeSliceByKeys(Some("0000000000"), None, None,
           SliceRange(count = 5), 1000))
       }
-      // the page pick's own job: the value-free liveness rollup + ring
-      // order top-K + collect
-      probe("rangeslice/pick_rollup_1phase") {
+      // the page pick's own job: the keyed value-free liveness pass
+      // (liveKeySet) + ring order top-K + collect
+      probe("rangeslice/pick_keyed_1pass") {
         import graft.operators.RangeScan
         val pre = stored.filter(
           RangeScan.keyBoundsPredicate(col("key"), Some("0000000000"), None))
         val tok = (df: org.apache.spark.sql.DataFrame) =>
           df.withColumn("token", graft.model.Tokens.token(
             CellEncodings.ordersMeta.partitioner, col("key")))
-        tok(lens.liveKeySetRollup(pre))
+        tok(lens.liveKeySet(pre))
           .orderBy(RangeScan.ringOrder(col("token"), None), col("key"))
           .limit(1000)
           .select(col("key")).collect()

@@ -210,37 +210,50 @@ class CassandraLens(
     case None => Reconcile.liveView(restricted)
   }
 
-  private def liveOf(pred: Column): DataFrame = cachedLive match {
-    case Some(c) => c.filter(pred) // key-scoped predicate: filter the cached view
-    case None => liveFromKeyed(cells.filter(pred))
+  /** Live view of the keys `pred` selects, cut to the columns `names`
+    * selects (a raw-byte predicate on super_name/col_name only).
+    */
+  private def liveOf(pred: Column, names: Column): DataFrame = cachedLive match {
+    case Some(c) => c.filter(pred && names) // key-scoped predicate: filter the cached view
+    case None => liveFromKeyed(cutToNames(cells.filter(pred), names))
   }
 
-  /** Live view of a KEY-BOUNDED restriction. Sidecar lenses keep their
-    * precomputed-horizon join shape (one aggregate + two tiny-table
-    * joins), and a store whose every leaf is BUCKETED by key already hands
-    * the reconcile its distribution — adding the keyed repartition there
-    * would re-shuffle a read that was exchange-FREE (PlanQualitySpec pins
-    * that contract).
+  /** Raw cells cut to the columns `names` selects, keeping the marker
+    * cells (col_name null) that carry the deletion horizons. `names` reads
+    * only super_name/col_name, so it keeps or drops every version of a
+    * column alike and commutes with the per-column reconcile; applied to
+    * raw cells, parquet can push it — the keyed pass's horizon windows
+    * would otherwise hold it above the reconcile. It must compare raw
+    * bytes only: the OR with `col_name IS NULL` pushes to the scan only
+    * when every leaf does.
+    */
+  private def cutToNames(raw: DataFrame, names: Column): DataFrame =
+    raw.filter(col("col_name").isNull || names)
+
+  /** Live view of a KEY-BOUNDED restriction. Sidecar lenses join their
+    * precomputed horizons ([[liveFrom]]); the rest reconcile in one
+    * key-clustered pass (Reconcile.liveByKey): one scan per store leaf,
+    * one `hashpartitioning(key)` exchange of the raw versions, the horizon
+    * windows, the winners aggregate and the caller's per-key slice window
+    * behind it, no join — on a store bucketed by key not even the
+    * exchange (plans/r22/read_after.txt: 2 scans for the store's two
+    * leaves, 1 shuffle exchange, 0 broadcasts for a 150-key multiget).
+    * KEY-BOUNDED ONLY: a keyed read's rows are bounded by the 10k-key page
+    * convention, so shuffling raw versions is small at any corpus size;
+    * the full-CF [[live]] keeps map-side partial aggregation ahead of its
+    * exchange.
     */
   private def liveFromKeyed(restricted: DataFrame): DataFrame = horizons match {
     case Some(_) => liveFrom(restricted)
-    case None if CassandraLens.bucketedByKey(cells.queryExecution.analyzed) =>
-      liveFrom(restricted)
-    case None =>
-      // Keyed reconcile: the restricted cells are repartitioned by key
-      // BEFORE the reconcile, so raw versions cross that exchange and the
-      // winners aggregate and the caller's per-key slice window run
-      // behind it. The row- and supercolumn-horizon aggregates read
-      // different (value-free) column sets, so ReuseExchange does not
-      // merge them: each re-scans the restriction behind its own keyed
-      // exchange and is broadcast into the shadow joins — 5 scans,
-      // 3 keyed exchanges and 2 broadcasts for a 150-key multiget
-      // (plans/r20/read_after.txt). KEY-BOUNDED ONLY: a keyed read's rows
-      // are bounded by the 10k-key page convention, so shuffling raw
-      // versions is small at any corpus size; the full-CF [[live]] keeps
-      // map-side partial aggregation ahead of its exchange.
-      Reconcile.liveView(restricted.repartition(col("key")))
+    case None => Reconcile.liveByKey(restricted)
   }
+
+  /** The keyed-read restriction: key equality for one key, an IN list for
+    * several, plus the domain-directory pruning predicate.
+    */
+  private def keysPredicate(keys: Seq[String]): Column =
+    (if (keys.size == 1) col("key") === keys.head else col("key").isin(keys: _*)) &&
+      domainPredicate(keys)
 
   /** domainSplit routing (fork CFMetaData.domainSplit): keyed reads derive
     * the 2-char domain of each requested key, so a domain-partitioned
@@ -283,11 +296,9 @@ class CassandraLens(
   /** Q1 `get` (thrift:300-304): one column / subcolumn / supercolumn. */
   def get(key: String, superName: Option[Array[Byte]], colName: Array[Byte]): DataFrame = {
     require(key.nonEmpty, "zero-length key")
-    val base = liveOf(col("key") === key && domainPredicate(Seq(key)))
-    superName match {
-      case Some(sc) => base.filter(col("super_name") === lit(sc) && col("col_name") === lit(colName))
-      case None => base.filter(col("super_name").isNull && col("col_name") === lit(colName))
-    }
+    liveOf(keysPredicate(Seq(key)),
+      superName.fold(col("super_name").isNull)(sc => col("super_name") === lit(sc)) &&
+        col("col_name") === lit(colName))
   }
 
   /** Q1 `get` with a ColumnPath naming only a SUPERCOLUMN (column unset):
@@ -296,8 +307,7 @@ class CassandraLens(
     */
   def getSuperColumn(key: String, superName: Array[Byte]): DataFrame = {
     require(key.nonEmpty, "zero-length key")
-    liveOf(col("key") === key && domainPredicate(Seq(key)))
-      .filter(col("super_name") === lit(superName))
+    liveOf(keysPredicate(Seq(key)), col("super_name") === lit(superName))
   }
 
   /** Q2 `get_slice` (thrift:310-315) for one key = Q4 over a single key. */
@@ -310,8 +320,7 @@ class CassandraLens(
     */
   def multigetSlice(keys: Seq[String], superName: Option[Array[Byte]], pred: SlicePredicate): DataFrame = {
     keys.foreach(k => require(k.nonEmpty, "zero-length key"))
-    val keyPred = if (keys.size == 1) col("key") === keys.head else col("key").isin(keys: _*)
-    sliceOver(liveOf(keyPred && domainPredicate(keys)), superName, pred)
+    sliceOver(liveOf(keysPredicate(keys), sliceNames(superName, pred)), superName, pred)
   }
 
   /** multiget_slice for a LARGE key set carried as a DataFrame: a broadcast
@@ -328,20 +337,30 @@ class CassandraLens(
     sliceOver(restricted, superName, pred)
   }
 
+  /** What a slice reads under `superName`: the parent filter, the
+    * comparator, the sliced name column and the per-key grouping.
+    */
+  private def sliceShape(superName: Option[Array[Byte]])
+      : (Column, ComparatorType.Value, String, Seq[String]) = superName match {
+    case Some(sc) => (col("super_name") === lit(sc), subCmp, "col_name", Seq("key", "super_name"))
+    case None if meta.isSuper => (lit(true), topCmp, "super_name", Seq("key"))
+    case None => (col("super_name").isNull, topCmp, "col_name", Seq("key"))
+  }
+
   /** Slice machinery shared by point reads and range scans. */
-  private def sliceOver(live: DataFrame, superName: Option[Array[Byte]], pred: SlicePredicate): DataFrame =
-    superName match {
-      case Some(sc) =>
-        validatePredicate(pred, subCmp)
-        Slice(live.filter(col("super_name") === lit(sc)), subCmp, "col_name", pred,
-          perKey = Seq("key", "super_name"))
-      case None if meta.isSuper =>
-        validatePredicate(pred, topCmp)
-        Slice(live, topCmp, "super_name", pred)
-      case None =>
-        validatePredicate(pred, topCmp)
-        Slice(live.filter(col("super_name").isNull), topCmp, "col_name", pred)
-    }
+  private def sliceOver(live: DataFrame, superName: Option[Array[Byte]], pred: SlicePredicate): DataFrame = {
+    val (parent, cmp, nameCol, perKey) = sliceShape(superName)
+    validatePredicate(pred, cmp)
+    Slice(live.filter(parent), cmp, nameCol, pred, perKey)
+  }
+
+  /** The columns a slice can return, as a raw-byte predicate on
+    * super_name/col_name (a superset: [[sliceOver]] applies the rest).
+    */
+  private def sliceNames(superName: Option[Array[Byte]], pred: SlicePredicate): Column = {
+    val (parent, cmp, nameCol, _) = sliceShape(superName)
+    parent && Slice.rawNameFilter(cmp, nameCol, pred)
+  }
 
   /** Q5 `get_count` over every key (the hadoop-connector-style full scan
     * shape): live top-level-entity count per key. Counting never needs the
@@ -355,22 +374,18 @@ class CassandraLens(
   }
 
   /** Q5 `get_count` (thrift:342-346): live column count per key —
-    * value-free like [[getCountAll]] unless the row cache already holds
-    * the reconciled view.
+    * value-free like [[getCountAll]] (over the keyed [[liveNamesKeyed]])
+    * unless the row cache already holds the reconciled view.
     */
   def getCount(keys: Seq[String], superName: Option[Array[Byte]]): DataFrame = {
-    val keyPred = col("key").isin(keys: _*)
+    val keyPred = keysPredicate(keys)
+    val names = superName.fold(lit(true))(sc => col("super_name") === lit(sc))
     val base = cachedLive match {
-      case Some(c) => c.filter(keyPred)
-      case None => liveColumns(cells.filter(keyPred))
+      case Some(c) => c.filter(keyPred && names)
+      case None => liveNamesKeyed(cutToNames(cells.filter(keyPred), names))
     }
-    superName match {
-      case Some(sc) =>
-        Slice.count(base.filter(col("super_name") === lit(sc)),
-          isSuper = false, perKey = Seq("key", "super_name"))
-      case None =>
-        Slice.count(base, meta.isSuper)
-    }
+    if (superName.isDefined) Slice.count(base, isSuper = false, perKey = Seq("key", "super_name"))
+    else Slice.count(base, meta.isSuper)
   }
 
   // ---- Q6: range scans ----
@@ -386,28 +401,29 @@ class CassandraLens(
       superName: Option[Array[Byte]], pred: SlicePredicate, maxKeys: Int): DataFrame = {
     require(maxKeys > 0, "get_range_slices requires a positive key count (thrift:240-246)")
     val bounds = RangeScan.keyBoundsPredicate(col("key"), startKey, endKey)
-    sliceOver(livePage(cachedLive.getOrElse(cells).filter(bounds), None, maxKeys),
-      superName, pred)
+    sliceOver(livePage(cachedLive.getOrElse(cells).filter(bounds), None, maxKeys,
+      sliceNames(superName, pred)), superName, pred)
   }
 
   /** Key-limited live view of a range `pre` — raw cells, or the row
     * cache's reconciled view. The first maxKeys LIVE keys in ring order
     * are picked ([[pickPage]]), then only the picked keys are reconciled:
     * the page restriction lands on the parquet scan, so the second pass
-    * reads maxKeys keys, not the range. The cached view is ALREADY
+    * reads maxKeys keys, not the range, cut to the slice's `names`
+    * ([[cutToNames]]) when that pass is keyed. The cached view is ALREADY
     * reconciled (every row live), so there the page is a distinct() over
     * it and the restriction a plain filter — the cache-hit path end to
     * end.
     */
   private def livePage(pre: DataFrame, startToken: Option[Column],
-      maxKeys: Int): DataFrame = withToken(
+      maxKeys: Int, names: Column): DataFrame = withToken(
     if (cachedLive.isDefined) {
       if (maxKeys == Int.MaxValue) pre
       else restrictToPage(pre, pickPage(pre.select(col("key")).distinct(),
         startToken, maxKeys, "range.page_pick_cached"))
     } else if (maxKeys == Int.MaxValue) liveFrom(pre)
     else pickPage(liveKeySet(pre), startToken, maxKeys, "range.page_pick") match {
-      case page @ Left(_) => liveFromKeyed(restrictToPage(pre, page))
+      case page @ Left(_) => liveFromKeyed(cutToNames(restrictToPage(pre, page), names))
       // above the page convention the restriction is not key-bounded
       case page => liveFrom(restrictToPage(pre, page))
     })
@@ -444,85 +460,36 @@ class CassandraLens(
     case Right(picked) => df.join(broadcast(picked), Seq("key"), "left_semi")
   }
 
-  /** The set of LIVE keys of a raw cell range, computed WITHOUT values:
-    * reconcile priority is (ts, tombstone, value) with the value bytes only
-    * breaking ties BETWEEN live cells, so whether a column's winner is live
-    * never depends on the value — compare per-column best live ts against
-    * best tombstone ts and the container deletion horizons.
-    *
-    * Self-computing path (round 20): a three-level ROLLUP —
-    * (key, super, col) → (key, super) → (key) — behind ONE exchange on
-    * `key` (HashPartitioning(key) satisfies every level's clustering, so
-    * the three aggregates stack in one stage). The r19 shape ran THREE
-    * separate aggregates (winners + row horizons + supercolumn horizons,
-    * each its own scan of the range and its own exchange) and joined
-    * them back; OptProbe r20 measured the pick's cost as plan stages,
-    * not data. The rollup reads the range once, value-free.
-    *
-    * Sidecar path: horizons are precomputed tiny tables — the win
-    * aggregate + two broadcast joins of [[liveColumns]] is already the
-    * minimal shape there.
+  /** The set of LIVE keys of a raw cell range — the page pick's input:
+    * [[liveNamesKeyed]] reduced to distinct keys. The distinct aggregates
+    * on `key` behind the pass's own key exchange, so the self-computing
+    * pick reads the range once, value-free, through one shuffle. The
+    * range is NOT key-bounded the way a multiget is: raw versions of the
+    * whole range cross that shuffle (SCALE.md on the deep-store
+    * crossover).
     */
-  private[graft] def liveKeySet(pre: DataFrame): DataFrame = horizons match {
-    case Some(_) => liveColumns(pre).select(col("key")).distinct()
-    case None => liveKeySetRollup(pre)
-  }
+  private[graft] def liveKeySet(pre: DataFrame): DataFrame =
+    liveNamesKeyed(pre).select(col("key")).distinct()
 
-  /** Three-level liveness rollup (see [[liveKeySet]]). Level 1 reduces
-    * versions per (key, super_name, col_name) to best live / best
-    * tombstone ts (marker cells — col_name null — reduce alongside, their
-    * tmax IS the container horizon). Level 2 reduces each (key, super)
-    * group to its best surviving column ts (`best`, strict > so the
-    * tombstone wins ts ties) and its container horizon (`cdel` — the
-    * supercolumn horizon for super groups, the ROW horizon for the
-    * super-null group). Level 3 keeps per key the best ts that also
-    * beats its group's container horizon, plus the row horizon; a key is
-    * live iff that best strictly beats the row horizon. Equivalent to
-    * [[liveColumns]].select(key).distinct() by construction (strict
-    * compares throughout; max-over-survivors > h ⟺ ∃ survivor > h);
-    * EquivalenceSpec-style law pinned in PlanQualitySpec against random
-    * cell soups.
+  /** Value-free live names of a raw cell set read through the keyed pass
+    * (Reconcile.liveNamesByKey); sidecar lenses join their precomputed
+    * horizons instead ([[liveColumns]]).
     */
-  private[graft] def liveKeySetRollup(pre: DataFrame): DataFrame = {
-    val negInf = lit(Long.MinValue)
-    pre
-      .select(col("key"), col("super_name"), col("col_name"),
-        col("ts"), col("tombstone"))
-      .repartition(col("key"))
-      .groupBy(col("key"), col("super_name"), col("col_name"))
-      .agg(
-        max(when(!col("tombstone"), col("ts"))).as("lmax"),
-        max(when(col("tombstone"), col("ts"))).as("tmax"))
-      .groupBy(col("key"), col("super_name"))
-      .agg(
-        max(when(col("col_name").isNotNull &&
-          col("lmax") > coalesce(col("tmax"), negInf), col("lmax"))).as("best"),
-        max(when(col("col_name").isNull, col("tmax"))).as("cdel"))
-      .groupBy(col("key"))
-      .agg(
-        max(when(col("best") > coalesce(col("cdel"), negInf), col("best")))
-          .as("best"),
-        max(when(col("super_name").isNull, col("cdel"))).as("rowdel"))
-      .filter(col("best") > coalesce(col("rowdel"), negInf))
-      .select(col("key"))
+  private def liveNamesKeyed(pre: DataFrame): DataFrame = horizons match {
+    case Some(_) => liveColumns(pre)
+    case None => Reconcile.liveNamesByKey(pre)
   }
 
   /** The live (key, super_name, col_name) set of a raw cell range,
-    * computed WITHOUT values — the shared metadata-only liveness frame
-    * behind [[liveKeySet]] and the value-free get_count paths. Tombstone
-    * wins timestamp ties, so a column is live iff its best LIVE ts
-    * strictly exceeds both its best tombstone ts and the container
-    * horizons — two scalar max buffers (plain HashAggregate; a struct
-    * buffer would be a SortAggregate, and a ts<<1|tomb bit-pack would
-    * overflow for sentinel-huge timestamps like Long.MaxValue).
+    * computed WITHOUT values — the metadata-only liveness frame of the
+    * full-CF paths (get_count over every key, existence probes, splits)
+    * and of the sidecar lens's keyed paths: a column is live iff its
+    * best live ts strictly exceeds its best tombstone ts
+    * (Reconcile.liveTsMaxima, aggregated map-side first) and the
+    * container horizons joined in after the aggregate.
     */
   private[graft] def liveColumns(pre: DataFrame): DataFrame = {
-    val win = pre
-      .filter(col("col_name").isNotNull)
-      .groupBy(col("key"), col("super_name"), col("col_name"))
-      .agg(
-        max(when(!col("tombstone"), col("ts"))).as("lmax"),
-        max(when(col("tombstone"), col("ts"))).as("tmax"))
+    val win = Reconcile.liveTsMaxima(pre.filter(col("col_name").isNotNull))
     val (rowH, scH) = horizons match {
       case Some((r, s)) =>
         (r.select(col("key"), col("row_del_ts")),
@@ -552,8 +519,8 @@ class CassandraLens(
     def inRange(df: DataFrame): DataFrame = withToken(df)
       .filter(RangeScan.tokenRangePredicate(col("token"), startToken, endToken))
       .drop("token")
-    sliceOver(livePage(inRange(cachedLive.getOrElse(cells)), startToken, maxKeys),
-      superName, pred)
+    sliceOver(livePage(inRange(cachedLive.getOrElse(cells)), startToken, maxKeys,
+      sliceNames(superName, pred)), superName, pred)
   }
 
   // ---- Q7/Q8/Q9: mutations (return the new store view) ----
@@ -687,27 +654,6 @@ class CassandraLens(
   * the same vectors (db/NameSortTest, db/TimeSortTest, TypeCompareTest).
   */
 object CassandraLens {
-  /** True iff every leaf relation of the plan is a parquet relation
-    * bucketed by `key` — such a scan already satisfies the reconcile's
-    * and the slice window's key clustering (the bucketed-layout
-    * zero-exchange contract), so the keyed-read repartition must not
-    * fire. A union with any non-bucketed leaf (e.g. an unflushed delta)
-    * reports false and keeps the r19 shape.
-    */
-  private[api] def bucketedByKey(
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean = {
-    val leaves = plan.collectLeaves()
-    leaves.nonEmpty && leaves.forall {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        l.relation match {
-          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            h.bucketSpec.exists(_.bucketColumnNames == Seq("key"))
-          case _ => false
-        }
-      case _ => false
-    }
-  }
-
   /** Loud ceiling on a hot-key cache set ([[CassandraLens.withRowCache]]):
     * the set lives as a driver list, broadcasts to executors, and pins
     * its rows in memory — 1e6 keys is already ~10× the reference's

@@ -24,11 +24,15 @@ class Keyspace(val spark: SparkSession, val name: String) {
   private def hscTable(cf: String) = s"${tableName(cf)}__hsc"
 
   /** Create/replace a column family plus its tombstone-horizon sidecar
-    * tables. The horizons are tiny (they are deletes); persisting them
-    * means every read joins two small tables instead of re-aggregating
-    * marker cells out of the big table — the keyspace face of
-    * CellStore.writeWithHorizons, and at 100 TB the difference between
-    * one scan of the store per query and three.
+    * tables — the keyspace face of CellStore.writeWithHorizons. The
+    * horizons are tiny (they are deletes). A lens opened by
+    * [[columnFamily]] carries them, so its reads plan the winners
+    * aggregate over the bucketed table (no exchange) joined against the
+    * two small sidecar tables (Reconcile.liveViewGiven). For unbounded
+    * reads (full-CF scans, counts, pages above 10000 keys) that replaces
+    * two marker-aggregate passes over the store; a key-bounded read
+    * without the sidecar would window its horizons in its own single
+    * pass (Reconcile.shadowByKey), so there the sidecar saves no scan.
     *
     * `meta.domainSplit` drives the physical layout, exactly like the
     * fork's CFMetaData flag: domain-partitioned + bucketed when set

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Merge & reconciliation operators (SURVEY §2.3) — the heart of the engine.
@@ -22,8 +23,16 @@ import org.apache.spark.sql.functions._
   * Container tombstones (row-level / supercolumn-level deletes,
   * db/ColumnFamilyStore.java:663-717 `removeDeleted*`) shadow any column
   * whose timestamp is <= the container's markedForDeleteAt. They are carried
-  * as marker cells (`col_name IS NULL`) and applied by joining each cell
-  * against the per-key (and per-supercolumn) maximum deletion timestamp.
+  * as marker cells (`col_name IS NULL`) and applied in one of two plans:
+  *  - unbounded reads ([[liveView]], [[liveViewGiven]], [[compacted]]):
+  *    the winners aggregate partially map-side, then join the per-key and
+  *    per-supercolumn maximum deletion timestamps (derived from the cells
+  *    or read from a sidecar);
+  *  - key-bounded reads ([[liveByKey]], [[liveNamesByKey]]): the horizons
+  *    are windowed maxima computed in the same key-clustered pass that
+  *    shadows the raw versions ahead of the winners aggregate
+  *    ([[shadowByKey]]), the reference's one-pass-per-row shape
+  *    (ColumnFamilyStore.getColumnFamily, db/ColumnFamilyStore.java:993-1114).
   */
 object Reconcile {
 
@@ -121,6 +130,70 @@ object Reconcile {
   /** Live view with precomputed horizons (sidecar read path). */
   def liveViewGiven(cells: DataFrame, rowDel: DataFrame, scDel: DataFrame): DataFrame =
     shadowByContainersGiven(latestCells(cells), rowDel, scDel).filter(!col("tombstone"))
+
+  /** Key-clustered shadowing of RAW versions: drops marker cells and every
+    * version whose ts is <= its row horizon (`max(ts)` of the key's row
+    * markers, windowed over `key`) or its supercolumn horizon (`max(ts)`
+    * of the (key, super_name) supercolumn markers, windowed over
+    * `(key, super_name)`). The input columns pass through unchanged.
+    *
+    * Shadowing a version before LWW equals shadowing the winner after it:
+    * comparePriority orders by ts first, so the winner carries its
+    * column's maximum ts. If that ts beats the horizon the winner survives
+    * the filter and still wins among the survivors; if it does not, no
+    * version of the column beats the horizon and the column is gone
+    * either way.
+    *
+    * Plan: both windows cluster on `key`, so Catalyst inserts ONE
+    * `hashpartitioning(key)` exchange on a plain store and none on a
+    * store bucketed by key, and the winners aggregate and a per-key slice
+    * window after it reuse that distribution. Raw versions cross the
+    * exchange (no map-side partial aggregate): KEY-BOUNDED reads only.
+    */
+  def shadowByKey(cells: DataFrame): DataFrame = {
+    val marker = col("col_name").isNull && col("tombstone")
+    cells
+      .withColumn("row_del_ts", max(when(marker && col("super_name").isNull, col("ts")))
+        .over(Window.partitionBy(col("key"))))
+      .withColumn("sc_del_ts", max(when(marker && col("super_name").isNotNull, col("ts")))
+        .over(Window.partitionBy(col("key"), col("super_name"))))
+      .filter(col("col_name").isNotNull && col("ts") > coalesce(
+        greatest(col("row_del_ts"), col("sc_del_ts")), lit(Long.MinValue)))
+      .drop("row_del_ts", "sc_del_ts")
+  }
+
+  /** [[liveView]] of a key-bounded cell set in one key-clustered pass:
+    * [[shadowByKey]], then the winners aggregate, then tombstones
+    * consumed. Same rows as [[liveView]] (see [[shadowByKey]]).
+    */
+  def liveByKey(cells: DataFrame): DataFrame =
+    latestCells(shadowByKey(cells)).filter(!col("tombstone"))
+
+  /** Best live ts (`lmax`) and best tombstone ts (`tmax`) per
+    * (key, super_name, col_name) — the value-free liveness verdict:
+    * reconcile priority is (ts, tombstone, value) with the value bytes
+    * only breaking ties BETWEEN live cells, so a column's winner is live
+    * iff lmax > tmax (the tombstone wins ties). Two scalar max buffers (a
+    * plain HashAggregate; a struct buffer would be a SortAggregate, and a
+    * ts<<1|tomb bit-pack would overflow for sentinel-huge timestamps like
+    * Long.MaxValue).
+    */
+  def liveTsMaxima(cells: DataFrame): DataFrame =
+    cells
+      .groupBy(col("key"), col("super_name"), col("col_name"))
+      .agg(
+        max(when(!col("tombstone"), col("ts"))).as("lmax"),
+        max(when(col("tombstone"), col("ts"))).as("tmax"))
+
+  /** The live (key, super_name, col_name) names of a key-bounded cell set,
+    * without values: the [[liveTsMaxima]] verdict over the versions
+    * [[shadowByKey]] keeps, behind the same single key exchange.
+    */
+  def liveNamesByKey(cells: DataFrame): DataFrame =
+    liveTsMaxima(shadowByKey(cells.select(col("key"), col("super_name"),
+        col("col_name"), col("ts"), col("tombstone"))))
+      .filter(col("lmax") > coalesce(col("tmax"), lit(Long.MinValue)))
+      .select(col("key"), col("super_name"), col("col_name"))
 
   /** Compaction output view (SURVEY §2.7): winning versions with tombstones
     * RETAINED unless expired — a tombstone (column-level or marker) is

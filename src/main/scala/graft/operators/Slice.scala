@@ -43,9 +43,8 @@ object Slice {
       pred: SlicePredicate,
       perKey: Seq[String] = Seq("key")): DataFrame = pred match {
 
-    case SliceByNames(names) =>
-      // NamesQueryFilter (db/filter/NamesQueryFilter.java:31-91)
-      live.filter(col(nameCol).isin(names.map(lit(_)): _*))
+    case SliceByNames(_) =>
+      live.filter(rawNameFilter(cmp, nameCol, pred))
 
     case SliceRange(start, finish, reversed, count) =>
       val sk = Comparators.sortKey(cmp, col(nameCol))
@@ -70,6 +69,32 @@ object Slice {
           .drop("_rank", "_sk")
       }
   }
+
+  /** The names a slice can return, as a predicate on the RAW bytes of
+    * `nameCol` that a parquet scan can push: the name list, or the range
+    * bounds where the comparator orders by raw bytes (Bytes, Ascii, Utf8)
+    * or Comparators.pushdownRange has an exact byte form. It may keep
+    * more names than the slice returns (the range in comparator order is
+    * applied by [[apply]]), never fewer. It reads only `nameCol`, so it
+    * keeps or drops every version of a column alike and also holds on raw
+    * cells ahead of the reconcile.
+    */
+  def rawNameFilter(cmp: ComparatorType.Value, nameCol: String, pred: SlicePredicate): Column =
+    pred match {
+      case SliceByNames(names) =>
+        // NamesQueryFilter (db/filter/NamesQueryFilter.java:31-91)
+        col(nameCol).isin(names.map(lit(_)): _*)
+      case SliceRange(start, finish, reversed, _) =>
+        val (lo, hi) = if (reversed) (finish, start) else (start, finish)
+        cmp match {
+          case ComparatorType.Bytes | ComparatorType.Ascii | ComparatorType.Utf8 =>
+            (if (lo.nonEmpty) col(nameCol) >= lit(lo) else lit(true)) &&
+              (if (hi.nonEmpty) col(nameCol) <= lit(hi) else lit(true))
+          case _ if lo.nonEmpty && hi.nonEmpty =>
+            Comparators.pushdownRange(cmp, col(nameCol), lo, hi).getOrElse(lit(true))
+          case _ => lit(true)
+        }
+    }
 
   /** Read-amplification guard (fork ReadColumnsLimit,
     * db/filter/SliceQueryFilter.java:113-146 + DatabaseDescriptor:2114-2120):

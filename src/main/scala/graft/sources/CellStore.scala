@@ -278,10 +278,12 @@ object CellStore {
       colBucketLo, colBucketHi, maxRanges).drop("zkey")
 
   /** Write the store PLUS the tombstone-horizon sidecar: the per-key and
-    * per-supercolumn deletion horizons are tiny (they are deletes), and
-    * persisting them means every read joins two small tables instead of
-    * re-aggregating marker cells out of the full store — at 100 TB that
-    * removes two scans of the big table per query. The sidecar is valid
+    * per-supercolumn deletion horizons are tiny (they are deletes), and a
+    * lens given them joins the two small tables into every read instead
+    * of re-aggregating marker cells out of the full store — at 100 TB
+    * that removes two scans of the big table per unbounded read (a
+    * key-bounded read without a sidecar windows its horizons in its one
+    * keyed pass, Reconcile.shadowByKey). The sidecar is valid
     * for exactly the runs written here; appended deltas require either a
     * sidecar refresh (compaction does this) or the self-computing path.
     */

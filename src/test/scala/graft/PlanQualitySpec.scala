@@ -101,25 +101,113 @@ class PlanQualitySpec extends SparkSpec {
             else ins(key, c, s"v$n", t(), sup = sup)
         }
       }
-      val df = cellsDf(cells)
-      val lens = new CassandraLens(df, CfMeta("t"))
-      def names(rows: Array[org.apache.spark.sql.Row]) = rows.map { r =>
-        (r.getString(0), Option(r.getAs[Array[Byte]](1)).map(new String(_, "UTF-8")),
-          new String(r.getAs[Array[Byte]](2), "UTF-8"))
-      }.toSet
-      val expected = names(Reconcile.liveView(df)
-        .select("key", "super_name", "col_name").distinct().collect())
-      val got = names(lens.liveColumns(df).collect())
-      assert(got == expected,
-        s"value-free diverged: extra=${got.diff(expected)} missing=${expected.diff(got)}")
-      // the round-20 three-level rollup (liveKeySetRollup — one exchange,
-      // no horizon joins) must agree at KEY grain on the same soups
-      val expectedKeys = expected.map(_._1)
-      val rollupKeys = lens.liveKeySetRollup(df).collect().map(_.getString(0)).toSet
-      assert(rollupKeys == expectedKeys,
-        s"rollup diverged: extra=${rollupKeys.diff(expectedKeys)} " +
-          s"missing=${expectedKeys.diff(rollupKeys)}")
+      // the same soup as a plain frame and as a 4-bucket table: the
+      // keyed pass plans one key exchange on the first and none on the
+      // second, and both must obey the same laws
+      spark.sql("DROP TABLE IF EXISTS graft_pq_soup")
+      val loc = new java.io.File("spark-warehouse/graft_pq_soup")
+      if (loc.exists()) new scala.reflect.io.Directory(loc).deleteRecursively()
+      graft.sources.CellStore.writeBucketed(cellsDf(cells), CfMeta("t"),
+        "graft_pq_soup", buckets = 4)
+      try {
+        for (df <- Seq(cellsDf(cells), spark.table("graft_pq_soup"))) {
+          val lens = new CassandraLens(df, CfMeta("t"))
+          def str(b: Array[Byte]) = new String(b, "UTF-8")
+          def names(rows: Array[org.apache.spark.sql.Row]) = rows.map { r =>
+            (r.getString(0), Option(r.getAs[Array[Byte]](1)).map(str),
+              str(r.getAs[Array[Byte]](2)))
+          }.toSet
+          def liveRows(live: org.apache.spark.sql.DataFrame) =
+            live.select("key", "super_name", "col_name", "value", "ts").collect()
+              .map(r => (r.getString(0), Option(r.getAs[Array[Byte]](1)).map(str),
+                str(r.getAs[Array[Byte]](2)), str(r.getAs[Array[Byte]](3)), r.getLong(4)))
+              .toSeq.sorted
+          val expectedRows = liveRows(Reconcile.liveView(df))
+          val keyedRows = liveRows(Reconcile.liveByKey(df))
+          assert(keyedRows == expectedRows,
+            s"keyed reconcile diverged: extra=${keyedRows.diff(expectedRows)} " +
+              s"missing=${expectedRows.diff(keyedRows)}")
+          val expected = expectedRows.map(r => (r._1, r._2, r._3)).toSet
+          val got = names(lens.liveColumns(df).collect())
+          assert(got == expected,
+            s"value-free diverged: extra=${got.diff(expected)} missing=${expected.diff(got)}")
+          val keyedNames = names(Reconcile.liveNamesByKey(df).collect())
+          assert(keyedNames == expected, s"keyed value-free diverged: " +
+            s"extra=${keyedNames.diff(expected)} missing=${expected.diff(keyedNames)}")
+          // the page pick's input: the keyed value-free pass at KEY grain
+          val expectedKeys = expected.map(_._1)
+          val liveKeys = lens.liveKeySet(df).collect().map(_.getString(0)).toSet
+          assert(liveKeys == expectedKeys,
+            s"live key set diverged: extra=${liveKeys.diff(expectedKeys)} " +
+              s"missing=${expectedKeys.diff(liveKeys)}")
+          // keyed slices cut the raw cells to the slice's names before the
+          // reconcile; the marker cells must survive that cut
+          val keys = (0 until 4).map(i => s"k$i")
+          val live = Reconcile.liveView(df)
+          def sliced(sup: Option[String], pred: graft.operators.SlicePredicate) =
+            sup match {
+              case Some(sc) => graft.operators.Slice(
+                live.filter(org.apache.spark.sql.functions.col("super_name") === b(sc)),
+                CfMeta("t").comparator, "col_name", pred, perKey = Seq("key", "super_name"))
+              case None => graft.operators.Slice(
+                live.filter(org.apache.spark.sql.functions.col("super_name").isNull),
+                CfMeta("t").comparator, "col_name", pred)
+            }
+          for ((sup, pred) <- Seq(
+              None -> graft.operators.SliceByNames(Seq(b("c0"), b("c2"))),
+              Some("s1") -> SliceRange(start = b("c1"), finish = b("c2")))) {
+            val got = liveRows(lens.multigetSlice(keys, sup.map(b), pred))
+            assert(got == liveRows(sliced(sup, pred)), s"keyed slice $sup $pred diverged")
+          }
+        }
+      } finally spark.sql("DROP TABLE IF EXISTS graft_pq_soup")
     }
+  }
+
+  test("keyed reads: one key exchange per reconcile pass, no broadcast, no sort aggregate") {
+    import org.apache.spark.sql.functions.col
+    val dir = java.nio.file.Files.createTempDirectory("graft_pq_keyed").toString
+    // 3000 keys with live, overwritten and column-deleted cells plus row
+    // and supercolumn markers, so every horizon branch has input
+    val many = (0 until 3000).flatMap { i =>
+      val k = f"$i%010d"
+      Seq(ins(k, "c1", "a", 1), ins(k, "c1", "b", 2), ins(k, "c2", "c", 1),
+        del(k, "c3", 2), ins(k, "c4", "d", 3, sup = "s1")) ++
+        (if (i % 7 == 0) Seq(delRow(k, 2)) else Nil) ++
+        (if (i % 11 == 0) Seq(delSuper(k, "s1", 4)) else Nil)
+    }
+    graft.sources.CellStore.write(cellsDf(many), CfMeta("t"), dir, numPartitions = 4)
+    val stored = new CassandraLens(spark.read.parquet(dir), CfMeta("t"))
+    def assertOnePass(what: String, df: org.apache.spark.sql.DataFrame): Unit = {
+      val plan = planOf(df)
+      val exchanges = plan.linesIterator.filter(_.contains("Exchange")).toSeq
+      assert(exchanges.size == 1 && exchanges.head.contains("Exchange hashpartitioning(key"),
+        s"$what: expected one key exchange:\n$plan")
+      assert(!plan.contains("BroadcastExchange") && !plan.contains("SortAggregate"),
+        s"$what:\n$plan")
+    }
+    val keys = (0L until 3000L by 20L).map(i => f"$i%010d")
+    val multiget = stored.multigetSlice(keys, None, SliceRange(count = 5))
+    assertOnePass("150-key multiget", multiget)
+    // the page pick runs eagerly inside rangeSliceByKeys; its pass is the
+    // live key set over the range restriction
+    val range = graft.operators.RangeScan.keyBoundsPredicate(
+      col("key"), Some("0000000000"), None)
+    assertOnePass("page pick", stored.liveKeySet(spark.read.parquet(dir).filter(range)))
+    val page = stored.rangeSliceByKeys(Some("0000000000"), None, None,
+      SliceRange(count = 5), 1000)
+    assertOnePass("1000-key page read", page)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("key", "col_name", "value").collect()
+        .map(r => (r.getString(0), new String(r.getAs[Array[Byte]](1), "UTF-8"),
+          new String(r.getAs[Array[Byte]](2), "UTF-8"))).toSet
+    val reference = graft.operators.Slice(
+      Reconcile.liveView(spark.read.parquet(dir).filter(col("key").isin(keys: _*)))
+        .filter(col("super_name").isNull),
+      CfMeta("t").comparator, "col_name", SliceRange(count = 5))
+    assert(rows(multiget) == rows(reference))
+    assert(!rows(multiget).exists(_._1 == "0000000000")) // row-deleted at ts 2
+    assert(page.count() > 0)
   }
 
   test("value-free liveness survives sentinel-huge timestamps") {
@@ -146,17 +234,19 @@ class PlanQualitySpec extends SparkSpec {
       "graft_pq_bucketed", buckets = 4)
     try {
       val lens = new CassandraLens(spark.table("graft_pq_bucketed"), CfMeta("t"))
-      val scan = lens.rangeSliceByKeys(None, None, None, SliceRange(count = 2), Int.MaxValue)
-      val plan = planOf(scan)
-      // bucketBy(key) satisfies ClusteredDistribution for the reconcile's
-      // groupBy(key, super, col) AND the per-key window — the only shuffle
-      // permitted is AQE plumbing around the horizon broadcast joins
-      val aggExchanges = plan.linesIterator
-        .filter(l => l.contains("Exchange hashpartitioning"))
-        .filter(_.contains("key")).toSeq
-      assert(aggExchanges.isEmpty,
-        s"bucketed reconcile should not re-shuffle by key:\n${aggExchanges.mkString("\n")}")
-      assert(liveValues(scan).nonEmpty)
+      // bucketBy(key) satisfies ClusteredDistribution for the unbounded
+      // read's reconcile groupBy(key, super, col), its horizon aggregates
+      // and the per-key window, and for the keyed pass's horizon windows
+      // under a 10-key page: neither re-shuffles by key
+      for (maxKeys <- Seq(Int.MaxValue, 10)) {
+        val scan = lens.rangeSliceByKeys(None, None, None, SliceRange(count = 2), maxKeys)
+        val aggExchanges = planOf(scan).linesIterator
+          .filter(l => l.contains("Exchange hashpartitioning"))
+          .filter(_.contains("key")).toSeq
+        assert(aggExchanges.isEmpty, s"bucketed reconcile (maxKeys $maxKeys) should " +
+          s"not re-shuffle by key:\n${aggExchanges.mkString("\n")}")
+        assert(liveValues(scan).nonEmpty)
+      }
     } finally spark.sql("DROP TABLE IF EXISTS graft_pq_bucketed")
   }
 
